@@ -207,15 +207,6 @@ def baseline_from_manifest(
     return pooled
 
 
-def _latest_per_part(rows: list) -> dict[int, dict]:
-    """Latest manifest row per partition (re-validated parts append a
-    fresh row; committed_at orders them)."""
-    out: dict[int, dict] = {}
-    for r in sorted(rows, key=lambda r: (r["committed_at"] or 0.0)):
-        out[int(r["part"])] = r.asDict()
-    return out
-
-
 def _unset_at(col: str, unset: float):
     """`x or default` semantics of the driver-side helpers: NULL and 0.0
     committed_at are both "unset"."""
@@ -224,10 +215,10 @@ def _unset_at(col: str, unset: float):
 
 
 def _latest_frame(m: DataFrame) -> DataFrame:
-    """_latest_per_part as a DataFrame: latest row per (run, part) via a
-    max-struct aggregation (map-side combinable, no window buffer).
-    Returns (run_id, part, committed_at, passed, n_rejected,
-    metrics_json)."""
+    """Latest manifest row per (run, part) — re-validated parts append a
+    fresh row and committed_at orders them — via a max-struct
+    aggregation (map-side combinable, no window buffer). Returns
+    (run_id, part, committed_at, passed, n_rejected, metrics_json)."""
     return (
         m.groupBy("run_id", "part")
         .agg(
@@ -248,13 +239,15 @@ def _latest_frame(m: DataFrame) -> DataFrame:
     )
 
 
-def _numeric_metrics(df: DataFrame) -> DataFrame:
-    """One row per (part, metric, value): explode the metrics JSON map,
-    keep numeric values only (try_cast: booleans/strings -> NULL), drop
-    the partition key masquerading as a metric."""
+def _numeric_metrics(df: DataFrame, *extra) -> DataFrame:
+    """One row per (part, *extra, metric, value): explode the metrics
+    JSON map, keep numeric values only (try_cast: booleans/strings ->
+    NULL), drop the partition key masquerading as a metric. ``extra``
+    columns (names or Columns) ride along on every row."""
     return (
         df.select(
             "part",
+            *extra,
             F.explode(
                 F.coalesce(
                     F.from_json("metrics_json", "map<string,string>"),
@@ -411,58 +404,15 @@ def anomaly_scan(
     m = read_manifest(spark, manifest_path)
     if m is None:
         raise FileNotFoundError(f"no manifest at {manifest_path}")
-
-    # `x or default` semantics of the previous driver implementation:
-    # NULL and 0.0 are both "unset". A current row with unset
-    # committed_at sorts as +inf (its history window is unbounded); an
-    # unset history row sorts as 0.0 (always before any current row).
-    def _at(col, unset):
-        c = F.col(col)
-        return F.when(c.isNull() | (c == 0.0), F.lit(unset)).otherwise(c)
-
-    # latest manifest row per (run, part): re-validated parts append a
-    # fresh row and committed_at orders them (the _latest_per_part
-    # contract, expressed as a max-struct aggregation so it stays
-    # map-side combinable instead of forcing a window buffer).
-    latest = (
-        m.groupBy("run_id", "part")
-        .agg(
-            F.max(
-                F.struct(
-                    _at("committed_at", 0.0).alias("_ord"),
-                    F.col("committed_at").alias("committed_at"),
-                    F.col("metrics_json").alias("metrics_json"),
-                )
-            ).alias("_r")
-        )
-        .select("run_id", "part", "_r.committed_at", "_r.metrics_json")
-    )
+    latest = _latest_frame(m)
     if latest.where(F.col("run_id") == run_id).isEmpty():
         raise ValueError(f"run_id {run_id!r} not in manifest {manifest_path}")
 
-    # one row per (part, metric, value): explode the metrics JSON map,
-    # keep numeric values only (try_cast: booleans/strings -> NULL),
-    # drop the partition key masquerading as a metric.
+    # a current row with unset committed_at sorts as +inf (its history
+    # window is unbounded); an unset history row sorts as 0.0 (always
+    # before any current row)
     def _explode(df, at_unset):
-        e = (
-            df.select(
-                "part",
-                _at("committed_at", at_unset).alias("at"),
-                F.explode(
-                    F.coalesce(
-                        F.from_json("metrics_json", "map<string,string>"),
-                        F.expr("map()"),
-                    )
-                ).alias("metric", "_raw"),
-            )
-            .where(
-                (F.col("metric") != "part")
-                & ~F.lower("_raw").isin("true", "false")
-            )
-            .withColumn("value", F.expr("try_cast(_raw as double)"))
-            .where(F.col("value").isNotNull())
-            .drop("_raw")
-        )
+        e = _numeric_metrics(df, _unset_at("committed_at", at_unset).alias("at"))
         if metrics is not None:
             e = e.where(F.col("metric").isin(list(metrics)))
         return e
@@ -648,6 +598,15 @@ def validate_snapshot_increments(
       the sentinel commits LAST — a crash before it re-runs the
       increment, never skips it.
 
+    ``verdicts_path`` receives row verdicts laid out as
+    ``<verdicts_path>/snapshot_version=<N>/part=<K>/``: each increment
+    writes only under its own version ``N``, so a delta never replaces
+    the verdicts of earlier versions that share its ``part`` values,
+    and reading the root (partition discovery yields
+    ``snapshot_version`` and ``part``) returns one verdict row per row
+    of the current snapshot. A full pass deletes every other
+    ``snapshot_version=`` directory before its sentinel commits.
+
     ``drift_columns`` (opt-in) adds the continuous DRIFT gate: each
     increment's per-partition distributions are compared against the
     last-validated version via ``drift_between_versions`` on
@@ -707,9 +666,26 @@ def validate_snapshot_increments(
             df = t.read(cur)  # rows changed: delta verdicts unsound
 
     run_id = f"{tag}{cur}"
+    version_verdicts = None
+    if verdicts_path:
+        verdicts_path = verdicts_path.rstrip("/")
+        version_verdicts = f"{verdicts_path}/snapshot_version={cur}"
     result = run_resumable(
-        spark, df, suite, manifest_path, run_id, verdicts_path
+        spark, df, suite, manifest_path, run_id, version_verdicts
     )
+    if verdicts_path and mode == "full":
+        # a full pass re-validated every current row: earlier versions'
+        # verdicts are superseded (and, after a row change, stale)
+        jvm = spark._jvm
+        root = jvm.org.apache.hadoop.fs.Path(verdicts_path)
+        fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
+        if fs.exists(root):
+            for st in fs.listStatus(root):
+                name = st.getPath().getName()
+                if name.startswith("snapshot_version=") and name != (
+                    f"snapshot_version={cur}"
+                ):
+                    fs.delete(st.getPath(), True)
     metrics = result.partition_metrics if result is not None else []
     sentinel = [
         {

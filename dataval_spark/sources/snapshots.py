@@ -22,7 +22,8 @@ file; a commit is an atomic swap of that pointer):
 * **Commit protocol**: write data files, write the snapshot to a temp
   name, then atomically ``rename(tmp, v<N>.json)``. Hadoop's rename
   fails (returns false) when the destination exists — exactly the
-  compare-and-swap Iceberg builds on. A loser re-reads the new current
+  compare-and-swap Iceberg builds on (a local filesystem places the
+  file with an atomic hard link instead). A loser re-reads the new current
   snapshot (so a concurrent append's rows are retained), recomputes its
   file list, and retries at N+1. Its already-written data files stay
   valid across retries — no rewrite.
@@ -53,6 +54,7 @@ from __future__ import annotations
 
 import hashlib
 import json
+import os
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -60,6 +62,9 @@ from pyspark.sql import DataFrame, SparkSession
 __all__ = ["SnapshotTable", "CommitConflict", "IncrementalReadError"]
 
 _MAX_COMMIT_RETRIES = 20
+
+# snapshot keys whose entries scope a list of data files
+_SCOPED = ("deletes", "renames", "retired", "defaults")
 
 # Iceberg's write.metadata.metrics truncate(16) default: string bounds
 # kept in the manifest are prefixes, not full values, so a pathological
@@ -169,8 +174,11 @@ class SnapshotTable:
     def _data_dir(self) -> str:
         return f"{self.root}/data"
 
+    # record-name prefix of this handle's version chain (branches differ)
+    _vprefix = "v"
+
     def _vpath(self, version: int) -> str:
-        return f"{self._meta_dir()}/v{version}.json"
+        return f"{self._meta_dir()}/{self._vprefix}{version}.json"
 
     # -- filesystem primitives -----------------------------------------
     def _write_text(self, path: str, text: str) -> None:
@@ -190,22 +198,37 @@ class SnapshotTable:
         finally:
             ins.close()
 
+    def _meta_names(self, prefix: str) -> list[str]:
+        """Names of the ``<prefix>*.json`` documents under meta/ (none
+        before the first commit)."""
+        meta = self._Path(self._meta_dir())
+        if not self._fs.exists(meta):
+            return []
+        names = (st.getPath().getName() for st in self._fs.listStatus(meta))
+        return [n for n in names if n.startswith(prefix) and n.endswith(".json")]
+
     # -- snapshot state ---------------------------------------------------
     def current_version(self) -> int | None:
         """Highest committed snapshot, None for an empty/absent table."""
-        meta = self._Path(self._meta_dir())
-        if not self._fs.exists(meta):
-            return None
-        best = None
-        for st in self._fs.listStatus(meta):
-            name = st.getPath().getName()
-            if name.startswith("v") and name.endswith(".json"):
-                try:
-                    n = int(name[1:-5])
-                except ValueError:
-                    continue
-                best = n if best is None or n > best else best
-        return best
+        versions = []
+        for name in self._meta_names(self._vprefix):
+            try:
+                versions.append(int(name[len(self._vprefix):-5]))
+            except ValueError:
+                continue
+        return max(versions, default=None)
+
+    def _records(self, versions=None):
+        """(version, record) for each retained snapshot among
+        ``versions`` (default: every version up to the current one);
+        expired or never-committed slots are skipped."""
+        if versions is None:
+            cur = self.current_version()
+            versions = range(cur + 1 if cur is not None else 0)
+        for k in versions:
+            p = self._vpath(k)
+            if self._fs.exists(self._Path(p)):
+                yield k, json.loads(self._read_text(p))
 
     def snapshot(self, version: int | str | None = None) -> dict:
         """Snapshot by number, by TAG name (a str), or current (None)."""
@@ -226,13 +249,9 @@ class SnapshotTable:
         tables) are skipped: their commit time is unknown, and guessing
         would silently time-travel to the wrong data. Raises when no
         retained record is old enough."""
-        cur = self.current_version()
         best = None
-        for k in range((cur + 1) if cur is not None else 0):
-            p = self._vpath(k)
-            if not self._fs.exists(self._Path(p)):
-                continue
-            stamp = json.loads(self._read_text(p)).get("committed_at")
+        for k, rec in self._records():
+            stamp = rec.get("committed_at")
             if stamp is not None and stamp <= ts:
                 best = k
         if best is None:
@@ -352,25 +371,37 @@ class SnapshotTable:
                 out[rel] = bounds
         return out, rows
 
+    def _manifests(self, snap: dict) -> tuple[list[list], dict, dict]:
+        """A snapshot's (files, stats, rows) from ONE pass over its
+        manifests: the [relative_path, bytes] list, the merged per-file
+        column bounds and the per-file row counts. Reads O(commits)
+        small metadata files, never the data directory."""
+        files: list[list] = []
+        stats: dict = {}
+        rows: dict = {}
+        for name in snap["manifests"]:
+            doc = json.loads(self._read_text(f"{self._meta_dir()}/{name}"))
+            files.extend(doc["files"])
+            stats.update(doc.get("stats", {}))
+            rows.update(doc.get("rows", {}))
+        return files, stats, rows
+
+    def files(self, snap: dict) -> list[list]:
+        """A snapshot's full [relative_path, bytes] list, resolved
+        through its manifests."""
+        return self._manifests(snap)[0]
+
     def file_stats(self, snap: dict) -> dict:
         """A snapshot's merged per-file column bounds,
         {relative_path: {column: [min, max]}}; files written before
         stats existed (or with no eligible columns) are simply absent."""
-        out: dict = {}
-        for name in snap["manifests"]:
-            doc = json.loads(self._read_text(f"{self._meta_dir()}/{name}"))
-            out.update(doc.get("stats", {}))
-        return out
+        return self._manifests(snap)[1]
 
     def file_rows(self, snap: dict) -> dict:
         """A snapshot's per-file row counts, {relative_path: n}; files
         written before row counts existed are absent (``row_count``
         then falls back to a data read)."""
-        out: dict = {}
-        for name in snap["manifests"]:
-            doc = json.loads(self._read_text(f"{self._meta_dir()}/{name}"))
-            out.update(doc.get("rows", {}))
-        return out
+        return self._manifests(snap)[2]
 
     def row_count(
         self, filters: dict | None = None, version: int | None = None
@@ -391,8 +422,7 @@ class SnapshotTable:
                 .where(self._interval_pred(filters))
                 .count()
             )
-        rows = self.file_rows(snap)
-        entries = self.files(snap)
+        entries, _, rows = self._manifests(snap)
         if not snap.get("deletes") and all(rel in rows for rel, _ in entries):
             # pending merge-on-read deletes invalidate the recorded
             # per-file counts (they count pre-delete rows) — fall back
@@ -410,11 +440,11 @@ class SnapshotTable:
         honest "unknown" beats a silently-partial answer. Renamed
         columns translate to each file's physical name."""
         snap = self.snapshot(version)
-        stats = self.file_stats(snap)
+        entries, stats, _ = self._manifests(snap)
         renames = snap.get("renames") or []
         rscoped = [set(r["files"]) for r in renames]
         lo = hi = None
-        for rel, _ in self.files(snap):
+        for rel, _ in entries:
             pcol = self._physical_name(
                 col,
                 frozenset(
@@ -433,17 +463,6 @@ class SnapshotTable:
             lo = mn if lo is None or mn < lo else lo
             hi = mx if hi is None or mx > hi else hi
         return None if lo is None else (lo, hi)
-
-    def files(self, snap: dict) -> list[list]:
-        """A snapshot's full [relative_path, bytes] list, resolved
-        through its manifests (reads O(commits) small metadata files,
-        never the data directory)."""
-        out: list[list] = []
-        for name in snap["manifests"]:
-            out.extend(
-                json.loads(self._read_text(f"{self._meta_dir()}/{name}"))["files"]
-            )
-        return out
 
     def exists(self) -> bool:
         return self.current_version() is not None
@@ -615,9 +634,8 @@ class SnapshotTable:
         exists (or a racer renamed first) — the loser retries.
 
         Stamps ``committed_at`` (epoch seconds) if absent — the ONE
-        place every commit funnels through. Derived commits that copy a
-        parent record (rollback, MOR delete, schema DDL) pop the
-        inherited stamp first so they record their own time; branch
+        place every commit funnels through. ``_record`` drops the
+        inherited stamp, so every built record gets its own time; branch
         fast-forward deliberately keeps the original stamp (the commit
         HAPPENED when the branch landed it, and the byte-identical
         replay is what makes the publish crash-resumable)."""
@@ -625,177 +643,239 @@ class SnapshotTable:
 
         if "committed_at" not in snap:
             snap = {**snap, "committed_at": round(_time.time(), 3)}
+        return self._create_once(self._vpath(version), json.dumps(snap, sort_keys=True))
+
+    def _create_once(self, path: str, text: str) -> bool:
+        """Write the meta document ``path`` iff nothing exists there —
+        the compare-and-swap every snapshot, tag and branch marker
+        commits through. The text lands in a temp file first, so
+        readers never see a partial document. Hadoop's rename fails
+        when the destination exists; the local filesystem checks and
+        then renames, so two racers can both pass the check — there a
+        hard link (which fails atomically on an existing name) places
+        the file instead."""
         self._fs.mkdirs(self._Path(self._meta_dir()))
         tmp = f"{self._meta_dir()}/_tmp_{uuid.uuid4().hex}.json"
-        self._write_text(tmp, json.dumps(snap, sort_keys=True))
-        ok = bool(self._fs.rename(self._Path(tmp), self._Path(self._vpath(version))))
+        self._write_text(tmp, text)
+        ok = None
+        if self._fs.getUri().getScheme() == "file":
+            local = [self._Path(p).toUri().getPath() for p in (tmp, path)]
+            try:
+                os.link(*local)
+                ok = True
+            except FileExistsError:
+                ok = False
+            except OSError:
+                pass  # no hard links on this mount: rename below
+            if ok is not None:
+                self._fs.delete(self._Path(tmp), False)
+                return ok
+        ok = bool(self._fs.rename(self._Path(tmp), self._Path(path)))
         if not ok:
             self._fs.delete(self._Path(tmp), False)
         return ok
 
-    def _schema_fields(self, df: DataFrame) -> list:
-        return sorted((f.name, f.dataType.simpleString()) for f in df.schema.fields)
+    @staticmethod
+    def _schema_fields(schema) -> list:
+        return sorted((f.name, f.dataType.simpleString()) for f in schema.fields)
 
-    def _commit(
+    def _record(
+        self,
+        head: dict | None,
+        changes: dict,
+        base: dict | None = None,
+        kept: set | None = None,
+        stream_marker: tuple[str, int] | None = None,
+    ) -> dict:
+        """The record that commits on top of ``head``: ``base``
+        (default ``head``; a rollback passes its target) plus the
+        operation's ``changes``. Every commit is built here, so the
+        shared rules live in one place:
+
+        * ``version``/``parent`` follow the head, and the inherited
+          ``committed_at`` is dropped (``_try_commit`` stamps anew);
+        * ``stream_state`` is the HEAD's map plus ``stream_marker``:
+          watermarks are monotone along the chain, so a rollback rewinds
+          rows, never the exactly-once batch markers;
+        * ``bloom_columns``: a commit that lists new manifests records
+          the writer's declared spec (the one its files were written
+          with); otherwise the base's carries;
+        * scoped lists (deletes/renames/retired/defaults) shrink to the
+          base files the record keeps, and empty entries are dropped.
+          ``kept=None`` keeps every file (append, merge-on-read delete,
+          DDL, rollback), an empty set none (overwrite, compact), a
+          copy-on-write rewrite its untouched files. Rewritten rows were
+          read with every scope applied and written under current
+          names, so new files need no scope; dropping an emptied rename
+          cannot break a chain (a live file in an older rename's scope
+          existed at every later rename too).
+
+        Empty optional keys are never recorded."""
+        rec = dict((head if base is None else base) or {})
+        rec.pop("committed_at", None)
+        if kept is not None:
+            for k in _SCOPED:
+                shrunk = [
+                    {**e, "files": [r for r in e["files"] if r in kept]}
+                    for e in rec.get(k) or []
+                ]
+                rec[k] = [e for e in shrunk if e["files"]]
+        rec.update(changes)
+        if "manifests" in changes and self._bloom_columns is not None:
+            rec["bloom_columns"] = dict(self._bloom_columns)
+        rec["stream_state"] = dict((head or {}).get("stream_state") or {})
+        if stream_marker is not None:
+            rec["stream_state"][stream_marker[0]] = int(stream_marker[1])
+        rec["parent"] = None if head is None else head["version"]
+        rec["version"] = 0 if head is None else head["version"] + 1
+        for k in ("bloom_columns", "stream_state", *_SCOPED):
+            if not rec.get(k):
+                rec.pop(k, None)
+        return rec
+
+    def _commit_retrying(self, attempt) -> int:
+        """CAS-retry loop for commits that stay valid on any head:
+        ``attempt(head)`` builds the record against the current head,
+        which is re-read after every lost race (so a concurrent
+        append's rows are retained)."""
+        for _ in range(_MAX_COMMIT_RETRIES):
+            cur = self.current_version()
+            rec = attempt(None if cur is None else self.snapshot(cur))
+            if self._try_commit(rec["version"], rec):
+                return rec["version"]
+        raise CommitConflict(
+            f"could not commit to {self.root} after "
+            f"{_MAX_COMMIT_RETRIES} attempts"
+        )
+
+    def _commit_pinned(
+        self, snap: dict, changes: dict, kept: set | None = None
+    ) -> int:
+        """Commit ``changes`` on top of ``snap`` or raise
+        CommitConflict — never retry. For commits derived from ``snap``
+        (a rewrite of its rows, a scope list of its files, DDL guards
+        checked against its schema): landing one on a newer head would
+        undo the interleaved commit's effect (Iceberg's rewrite
+        validation makes the same choice)."""
+        rec = self._record(snap, changes, kept=kept)
+        if not self._try_commit(rec["version"], rec):
+            raise CommitConflict(
+                f"table {self.root} advanced past v{snap['version']} "
+                f"during {changes['operation']}; vacuum will reclaim any "
+                "files the attempt wrote — rerun against the new current "
+                "snapshot"
+            )
+        return rec["version"]
+
+    def _stage(
         self,
         df: DataFrame,
-        operation: str,
         partition_by: list[str] | None,
-        base_files: bool,
         merge_schema: bool = False,
-        stream_marker: tuple[str, int] | None = None,
-        evolve_layout: bool = False,
-    ) -> int:
-        new_files = self._write_data_files(df, partition_by)
-        new_manifest = self._write_manifest(
-            new_files, *self._collect_stats(new_files)
-        )
-        return self._commit_staged(
-            new_files,
-            new_manifest,
-            df.schema.json(),
-            self._schema_fields(df),
-            operation,
-            partition_by,
-            base_files,
-            merge_schema,
-            stream_marker,
-            evolve_layout,
-        )
+    ) -> dict:
+        """Write df's data files and their manifest; return the
+        JSON-serializable handle a commit consumes."""
+        files = self._write_data_files(df, partition_by)
+        return {
+            "files": files,
+            "manifest": self._write_manifest(files, *self._collect_stats(files)),
+            "schema": df.schema.json(),
+            "schema_fields": self._schema_fields(df.schema),
+            "partition_spec": self._canonical_specs(partition_by),
+            "merge_schema": bool(merge_schema),
+        }
+
+    def _guard_added_names(self, snap: dict, names: set, live: set) -> None:
+        """Refuse to add a column whose name still exists PHYSICALLY in
+        live files (the old name of a rename, or a dropped column): the
+        pinned schema would silently read the stale values into it."""
+        for ent in snap.get("retired") or []:
+            if ent["name"] in names and live & set(ent["files"]):
+                raise ValueError(
+                    f"cannot add column {ent['name']!r}: the name is still "
+                    "carried physically by live data files (renamed or "
+                    "dropped earlier); compact() first or pick another "
+                    "name"
+                )
 
     def _commit_staged(
         self,
-        new_files: list[list],
-        new_manifest: str,
-        schema_json: str,
-        fields: list,
+        handle: dict,
         operation: str,
-        partition_by: list[str] | None,
-        base_files: bool,
-        merge_schema: bool = False,
         stream_marker: tuple[str, int] | None = None,
         evolve_layout: bool = False,
     ) -> int:
-        """The commit half of a write: CAS-retry loop over
-        already-written data files + manifest (shared by the one-shot
-        ops and the stage/publish pair)."""
-        for _ in range(_MAX_COMMIT_RETRIES):
-            cur = self.current_version()
-            parent = self.snapshot(cur) if cur is not None else None
-            if base_files and cur is not None:
+        """The commit half of a write: CAS-retry loop over a staged
+        handle's already-written files + manifest (shared by append,
+        overwrite and publish). An ``append`` keeps the parent's files
+        and must pass its layout and schema guards; an ``overwrite``
+        replaces them."""
+        fields = [tuple(f) for f in handle["schema_fields"]]
+        own_spec = list(handle["partition_spec"])
+
+        def attempt(parent: dict | None) -> dict:
+            changes = {
+                "operation": operation,
+                "schema": handle["schema"],
+                "schema_fields": json.dumps(fields),
+                "manifests": [handle["manifest"]],
+                "partition_spec": own_spec,
+            }
+            if operation == "append" and parent is not None:
+                parent_files = self.files(parent)
                 if not evolve_layout:
-                    parent_files = self.files(parent)
                     self._guard_layout(
-                        parent_files + new_files,
+                        parent_files + handle["files"],
                         operation,
                         sanctioned={
                             self._entry_layout(rel) for rel, _ in parent_files
                         },
+                    )
+                    # record the PARENT's spec, not this writer's
+                    # resolution: if a concurrent evolve_layout commit
+                    # won the race, re-recording the pre-race spec would
+                    # silently undo the evolution (its files still land
+                    # under the old — sanctioned — layout)
+                    changes["partition_spec"] = parent.get(
+                        "partition_spec", own_spec
                     )
                 parent_fields = sorted(
                     map(tuple, json.loads(parent["schema_fields"]))
                 )
                 if parent_fields != fields:
                     # additive evolution (Iceberg add-column semantics):
-                    # df must carry every parent field unchanged; the
-                    # new snapshot's schema is then df's (the union) and
-                    # older files read the added columns as NULL under
-                    # the pinned snapshot schema
-                    additive = merge_schema and all(
-                        f in fields for f in parent_fields
-                    )
-                    if additive:
-                        # a NEW column must not reuse a name that still
-                        # exists PHYSICALLY in live files (the old name
-                        # of a rename, or a dropped column): the pinned
-                        # schema would silently read the stale values
-                        # into the new column for those files
-                        added = {n for n, _ in fields} - {
-                            n for n, _ in parent_fields
-                        }
-                        live = None
-                        for ent in parent.get("retired") or []:
-                            if ent["name"] not in added:
-                                continue
-                            if live is None:
-                                live = {
-                                    rel for rel, _ in self.files(parent)
-                                }
-                            if live & set(ent["files"]):
-                                raise ValueError(
-                                    f"cannot add column {ent['name']!r}:"
-                                    " the name is still carried "
-                                    "physically by live data files "
-                                    "(renamed or dropped earlier); "
-                                    "compact() first or pick another "
-                                    "name"
-                                )
-                    if not additive:
+                    # df must carry every parent field unchanged; the new
+                    # snapshot's schema is then df's (the union) and older
+                    # files read the added columns as NULL
+                    if not (
+                        handle.get("merge_schema")
+                        and all(f in fields for f in parent_fields)
+                    ):
                         raise ValueError(
-                            f"append schema mismatch vs snapshot v{cur}: "
+                            f"append schema mismatch vs snapshot "
+                            f"v{parent['version']}: "
                             f"{parent['schema_fields']} != {fields}"
                             + (
                                 ""
-                                if merge_schema
+                                if handle.get("merge_schema")
                                 else " (additive evolution: pass "
                                 "merge_schema=True)"
                             )
                         )
-                manifests = list(parent["manifests"]) + [new_manifest]
-            else:
-                manifests = [new_manifest]
-            version = 0 if cur is None else cur + 1
-            # a non-evolving append records the PARENT's spec, not its
-            # own resolution: if a concurrent evolve_layout commit won
-            # the race, re-recording the spec this writer resolved
-            # before the race would silently undo the evolution (its
-            # files still land under the old — sanctioned — layout;
-            # only the spec RECORD follows the chain head)
-            own_spec = self._canonical_specs(partition_by)
-            if base_files and parent is not None and not evolve_layout:
-                spec = parent.get("partition_spec", own_spec)
-            else:
-                spec = own_spec
-            snap = {
-                "version": version,
-                "parent": cur,
-                "operation": operation,
-                "schema": schema_json,
-                "schema_fields": json.dumps(fields),
-                "manifests": manifests,
-                "partition_spec": spec,
-            }
-            blooms = self._resolved_blooms()
-            if blooms:
-                snap["bloom_columns"] = blooms
-            # pending merge-on-read deletes follow the files they scope:
-            # an append keeps them (its new files are exempt — not in
-            # any scope list); an overwrite replaces the content and
-            # drops them with it. Rename scopes and retired-name guards
-            # ride along identically.
-            if base_files and parent:
-                for k in ("deletes", "renames", "retired", "defaults"):
-                    if parent.get(k):
-                        snap[k] = parent[k]
-            # stream watermarks ride the chain HEAD: every commit copies
-            # its parent's map forward, so the exactly-once check is one
-            # current-snapshot read and expire_snapshots can never lose
-            # it (the state lives in every later snapshot, not only the
-            # one that recorded it)
-            state = dict(parent.get("stream_state", {})) if parent else {}
-            if stream_marker is not None:
-                state[stream_marker[0]] = int(stream_marker[1])
-            if state:
-                snap["stream_state"] = state
-            if self._try_commit(version, snap):
-                return version
-            # lost the race: a concurrent commit landed at `version` —
-            # loop re-reads the new current snapshot so ITS rows are
-            # retained under append semantics
-        raise CommitConflict(
-            f"could not commit to {self.root} after "
-            f"{_MAX_COMMIT_RETRIES} attempts"
-        )
+                    self._guard_added_names(
+                        parent,
+                        {n for n, _ in fields} - {n for n, _ in parent_fields},
+                        {rel for rel, _ in parent_files},
+                    )
+                changes["manifests"] = parent["manifests"] + changes["manifests"]
+            return self._record(
+                parent,
+                changes,
+                kept=None if operation == "append" else set(),
+                stream_marker=stream_marker,
+            )
+
+        return self._commit_retrying(attempt)
 
     def stream_batch(self, run_key: str) -> int | None:
         """The highest streaming batch id committed for ``run_key``
@@ -835,16 +915,11 @@ class SnapshotTable:
         new spec without the flag; ``compact()`` consolidates the whole
         table into the current spec. An unsanctioned layout switch
         still fails closed — accidental mixes fragment the tree."""
-        if partition_by is None and self.exists():
-            partition_by = self.partition_specs(self.snapshot())
-        return self._commit(
-            df,
+        return self._commit_staged(
+            self.stage_append(df, partition_by, merge_schema),
             "append",
-            partition_by,
-            base_files=True,
-            merge_schema=merge_schema,
-            stream_marker=stream_marker,
-            evolve_layout=evolve_layout,
+            stream_marker,
+            evolve_layout,
         )
 
     # -- write-audit-publish -----------------------------------------------
@@ -869,16 +944,7 @@ class SnapshotTable:
         not run vacuum while an audit is in flight."""
         if partition_by is None and self.exists():
             partition_by = self.partition_specs(self.snapshot())
-        files = self._write_data_files(df, partition_by)
-        manifest = self._write_manifest(files, *self._collect_stats(files))
-        return {
-            "files": files,
-            "manifest": manifest,
-            "schema": df.schema.json(),
-            "schema_fields": self._schema_fields(df),
-            "partition_spec": self._canonical_specs(partition_by),
-            "merge_schema": bool(merge_schema),
-        }
+        return self._stage(df, partition_by, merge_schema)
 
     def read_staged(self, handle: dict) -> DataFrame:
         """The staged (uncommitted, reader-invisible) rows, for the
@@ -895,17 +961,7 @@ class SnapshotTable:
         ``stream_marker`` records an exactly-once batch watermark in
         the same commit — the audited-streaming-sink case, where the
         publish and the replay guard must be one atomic step."""
-        return self._commit_staged(
-            handle["files"],
-            handle["manifest"],
-            handle["schema"],
-            [tuple(f) for f in handle["schema_fields"]],
-            "append",
-            list(handle["partition_spec"]) or None,
-            base_files=True,
-            merge_schema=handle.get("merge_schema", False),
-            stream_marker=stream_marker,
-        )
+        return self._commit_staged(handle, "append", stream_marker)
 
     def abort_staged(self, handle: dict) -> int:
         """Discard a staged write: delete its data files + manifest.
@@ -924,32 +980,15 @@ class SnapshotTable:
     def overwrite(self, df: DataFrame, partition_by: list[str] | None = None) -> int:
         """Snapshot-atomic replace (history retained; time travel still
         reads every prior version)."""
-        return self._commit(df, "overwrite", partition_by, base_files=False)
+        return self._commit_staged(self._stage(df, partition_by), "overwrite")
 
     def rollback(self, version: int) -> int:
         """Commit a NEW snapshot whose content is snapshot `version`'s
         (history is never rewritten)."""
         target = self.snapshot(version)
-        for _ in range(_MAX_COMMIT_RETRIES):
-            cur = self.current_version()
-            new_version = (cur or 0) + 1
-            snap = dict(target)
-            snap.update(
-                {"version": new_version, "parent": cur, "operation": "rollback"}
-            )
-            snap.pop("committed_at", None)  # restamp: this commit is NOW
-            # stream watermarks are monotone along the CHAIN, not the
-            # content: a rollback rewinds rows, never the exactly-once
-            # batch markers (a replayed batch must still be a no-op)
-            snap.pop("stream_state", None)
-            head_state = (
-                self.snapshot(cur).get("stream_state") if cur is not None else None
-            )
-            if head_state:
-                snap["stream_state"] = head_state
-            if self._try_commit(new_version, snap):
-                return new_version
-        raise CommitConflict(f"rollback lost {_MAX_COMMIT_RETRIES} races")
+        return self._commit_retrying(
+            lambda head: self._record(head, {"operation": "rollback"}, base=target)
+        )
 
     # -- read path --------------------------------------------------------
     def read(self, version: int | str | None = None) -> DataFrame:
@@ -1000,10 +1039,10 @@ class SnapshotTable:
         if any(k is None for k in keys):
             raise ValueError("NULL keys never match; remove None from keys")
         snap = self.snapshot(version)
-        stats = self.file_stats(snap)  # one manifest parse for ALL keys
+        meta = self._manifests(snap)  # one manifest parse for ALL keys
         candidates: dict[str, list] = {}
         for k in keys:
-            hit, _ = self._split_by_overlap(snap, {key_col: (k, k)}, stats)
+            hit, _ = self._split_by_overlap(snap, {key_col: (k, k)}, meta)
             for entry in hit:
                 candidates.setdefault(entry[0], entry)
         from pyspark.sql import functions as F
@@ -1013,7 +1052,7 @@ class SnapshotTable:
         )
 
     def _split_by_overlap(
-        self, snap: dict, filters: dict, stats: dict | None = None
+        self, snap: dict, filters: dict, meta: tuple | None = None
     ) -> tuple[list[list], list[list]]:
         """Partition a snapshot's file entries into (possibly-matching,
         provably-non-matching) for interval ``filters``, judged on the
@@ -1023,11 +1062,11 @@ class SnapshotTable:
         transform (monotone transforms map interval endpoints; bucket
         serves equality only) and tested against the directory value.
         A file with no recorded bounds for a filtered column is always
-        possibly-matching."""
+        possibly-matching. ``meta`` is the snapshot's ``_manifests``
+        triple when the caller already holds it."""
         from .transforms import parse_partition_specs
 
-        if stats is None:
-            stats = self.file_stats(snap)
+        entries, stats, _ = meta or self._manifests(snap)
         specs = self.partition_specs(snap)
         derived = {
             t.source: t
@@ -1122,7 +1161,7 @@ class SnapshotTable:
 
         hit: list[list] = []
         miss: list[list] = []
-        for entry in self.files(snap):
+        for entry in entries:
             (hit if overlaps(entry[0]) else miss).append(entry)
         return hit, miss
 
@@ -1285,9 +1324,12 @@ class SnapshotTable:
             raise ValueError(
                 f"bad incremental range v{from_version}..v{to_version}"
             )
+        # every append record lists its parent's manifests plus ONE new
+        # manifest, so the files it added are exactly those of the
+        # manifests its predecessor does not list — the only manifest
+        # reads the walk needs
         out: list[list] = []
-        seen: set[str] = set()
-        prev_rels: set[str] | None = None
+        prev: set[str] = set()
         for v in range(from_version, to_v + 1):
             try:
                 snap = self.snapshot(v)
@@ -1297,18 +1339,11 @@ class SnapshotTable:
                     f"v{from_version}..v{to_v} has no append-only history "
                     "— read the target snapshot in full instead"
                 ) from exc
-            rels = {rel for rel, _ in self.files(snap)}
-            if v == from_version:
-                prev_rels = rels
-                continue
             op = snap.get("operation")
-            if op == "append":
-                added = rels - prev_rels
-                for e in self.files(snap):
-                    if e[0] in added and e[0] not in seen:
-                        seen.add(e[0])
-                        out.append(e)
-            elif op not in ("compact", "schema"):
+            if v > from_version and op == "append":
+                new = [m for m in snap["manifests"] if m not in prev]
+                out.extend(self.files({"manifests": new}))
+            elif v > from_version and op not in ("compact", "schema"):
                 # "schema" (rename/drop/widen DDL) is metadata-only:
                 # rows are untouched, so the range stays an append-only
                 # changelog; the delta reads under the TARGET snapshot's
@@ -1319,7 +1354,7 @@ class SnapshotTable:
                     f"v{from_version}..v{to_v} is not an append-only "
                     "changelog; read the target snapshot in full instead"
                 )
-            prev_rels = rels
+            prev = set(snap["manifests"])
         return out
 
     def incremental_read(
@@ -1346,19 +1381,23 @@ class SnapshotTable:
         partition_by: list[str] | None,
     ) -> int:
         """Commit ``kept_entries + files(replacement_df)`` as one new
-        snapshot pinned to ``snap`` — the copy-on-write commit step
-        shared by delete_where/update_where/merge. Untouched files keep
-        their recorded stats; rewritten data gets fresh bounds. Like
-        compact, the CAS must fail (not retry) past a concurrent commit:
-        the rewrite was derived from ``snap``, so landing it later would
-        undo the interleaved commit's effect on the rewritten rows.
-        ``partition_by=None`` inherits the snapshot's partition spec
-        (transforms included); the final file list is guarded against
-        layout mixes either way."""
+        snapshot pinned to ``snap`` — the rewrite commit shared by
+        delete_where/delete_keys/update_where/merge (copy-on-write) and
+        compact (nothing kept). Untouched files keep their recorded
+        stats; rewritten data gets fresh bounds. The CAS must fail (not
+        retry) past a concurrent commit: the rewrite was derived from
+        ``snap``, so landing it later would undo the interleaved
+        commit's effect on the rewritten rows. ``partition_by=None``
+        inherits the snapshot's partition spec (transforms included);
+        the final file list is guarded against layout mixes either way.
+        Pending merge-on-read deletes keep scoping the files that
+        carried over unchanged (their rel paths are stable); rows that
+        land in new files are exempt by construction — including rows
+        update_where just changed INTO a deleted range, which is SQL
+        UPDATE semantics, not a resurrection."""
         if partition_by is None:
             partition_by = self.partition_specs(snap)
-        all_stats = self.file_stats(snap)
-        all_rows = self.file_rows(snap)
+        base_files, all_stats, all_rows = self._manifests(snap)
         new_files = self._write_data_files(replacement_df, partition_by)
         # layouts already present in the base snapshot are sanctioned
         # (an earlier evolve_layout append introduced them); only a NEW
@@ -1366,9 +1405,7 @@ class SnapshotTable:
         self._guard_layout(
             kept_entries + new_files,
             operation,
-            sanctioned={
-                self._entry_layout(rel) for rel, _ in self.files(snap)
-            },
+            sanctioned={self._entry_layout(rel) for rel, _ in base_files},
         )
         stats = {
             rel: all_stats[rel] for rel, _ in kept_entries if rel in all_stats
@@ -1380,81 +1417,61 @@ class SnapshotTable:
         stats.update(new_stats)
         rows.update(new_rows)
         manifest = self._write_manifest(kept_entries + new_files, stats, rows)
-        base = snap["version"]
-        new_snap = {
-            "version": base + 1,
-            "parent": base,
-            "operation": operation,
-            "schema": snap["schema"],
-            "schema_fields": snap["schema_fields"],
-            "manifests": [manifest],
-            "partition_spec": self._canonical_specs(partition_by),
-        }
-        if snap.get("stream_state"):
-            new_snap["stream_state"] = snap["stream_state"]
-        blooms = self._resolved_blooms()
-        if blooms:
-            new_snap["bloom_columns"] = blooms
-        # pending MOR deletes keep scoping the files that carried over
-        # unchanged (their rel paths are stable); rewritten rows were
-        # read WITH the deletes applied, and rows that land in new files
-        # are exempt by construction — including rows update_where just
-        # changed INTO a deleted range, which is SQL UPDATE semantics,
-        # not a resurrection
-        kept_rels = {rel for rel, _ in kept_entries}
-        carried = [
-            {**d, "files": [r for r in d["files"] if r in kept_rels]}
-            for d in (snap.get("deletes") or [])
-        ]
-        carried = [d for d in carried if d["files"]]
-        if carried:
-            new_snap["deletes"] = carried
-        # rename scopes and retired-name guards shrink to the files that
-        # carried over unchanged: rewritten rows were read under the
-        # LOGICAL schema and re-written with current physical names, so
-        # new files need no mapping. Dropping an entry whose scope went
-        # empty cannot break a chain: a live file in an older rename's
-        # scope existed at every later rename too (scopes only shrink by
-        # file removal), so an older entry can only outlive a newer one
-        # when no live file needs the newer step.
-        for k in ("renames", "retired", "defaults"):
-            kept = [
-                {**e, "files": [r for r in e["files"] if r in kept_rels]}
-                for e in (snap.get(k) or [])
-            ]
-            kept = [e for e in kept if e["files"]]
-            if kept:
-                new_snap[k] = kept
-        if not self._try_commit(base + 1, new_snap):
-            raise CommitConflict(
-                f"table {self.root} advanced past v{base} during "
-                f"{operation}; vacuum will reclaim the attempt's files — "
-                "rerun against the new current snapshot"
-            )
-        return base + 1
-
-    def _commit_mor_delete(self, snap: dict, entry: dict) -> int:
-        """Commit a merge-on-read delete: the base snapshot plus one
-        more ``deletes`` entry, no data written. Pins the base version
-        (a lost CAS means the scope list is stale — rerun)."""
-        base = snap["version"]
-        new_snap = dict(snap)
-        new_snap.pop("committed_at", None)  # restamp: this commit is NOW
-        new_snap.update(
+        return self._commit_pinned(
+            snap,
             {
-                "version": base + 1,
-                "parent": base,
-                "operation": "delete",
-                "deletes": list(snap.get("deletes") or []) + [entry],
-            }
+                "operation": operation,
+                "manifests": [manifest],
+                "partition_spec": self._canonical_specs(partition_by),
+            },
+            kept={rel for rel, _ in kept_entries},
         )
-        if not self._try_commit(base + 1, new_snap):
-            raise CommitConflict(
-                f"table {self.root} advanced past v{base} during "
-                "merge-on-read delete; rerun against the new current "
-                "snapshot"
+
+    def _delete_rows(
+        self,
+        snap: dict,
+        filters: dict,
+        entry: dict,
+        pred,
+        partition_by: list[str] | None,
+        mode: str,
+    ) -> int | None:
+        """The delete commit shared by delete_where and delete_keys:
+        candidate files are those whose bounds overlap ``filters``
+        (None — a metadata-only no-op — when there are none).
+        Merge-on-read records ``entry`` (the delete's JSON form) scoped
+        to the candidates, pinned to the base version (a lost CAS means
+        the scope list is stale — rerun); copy-on-write rewrites the
+        candidates minus the rows matching ``pred``."""
+        from pyspark.sql import functions as F
+
+        candidates, untouched = self._split_by_overlap(snap, filters)
+        if not candidates:
+            return None
+        if mode == "merge-on-read":
+            entry = {**entry, "files": sorted(rel for rel, _ in candidates)}
+            try:
+                json.dumps(entry)
+            except TypeError as exc:
+                raise TypeError(
+                    "merge-on-read delete values must be JSON-serializable "
+                    f"(numbers / ISO strings); got {entry!r}"
+                ) from exc
+            deletes = list(snap.get("deletes") or []) + [entry]
+            return self._commit_pinned(
+                snap, {"operation": "delete", "deletes": deletes}
             )
-        return base + 1
+        if mode != "copy-on-write":
+            raise ValueError(
+                f"unknown delete mode {mode!r}: expected "
+                "'copy-on-write' or 'merge-on-read'"
+            )
+        survivors = self._read_entries(snap, candidates).where(
+            ~F.coalesce(pred, F.lit(False))
+        )
+        return self._replace_entries(
+            snap, untouched, survivors, "delete", partition_by
+        )
 
     def delete_where(
         self,
@@ -1485,39 +1502,13 @@ class SnapshotTable:
         pending deletes and clears them (and always rewrites while any
         are pending). Filter values must be JSON-serializable
         (numbers / ISO strings)."""
-        from pyspark.sql import functions as F
-
-        snap = self.snapshot()
-        candidates, untouched = self._split_by_overlap(snap, filters)
-        if not candidates:
-            return None
-        if mode == "merge-on-read":
-            entry = {
-                "filters": {
-                    c: [lo, hi] for c, (lo, hi) in filters.items()
-                },
-                "files": sorted(rel for rel, _ in candidates),
-            }
-            try:
-                json.dumps(entry["filters"])
-            except TypeError as exc:
-                raise TypeError(
-                    "merge-on-read delete filters must be "
-                    "JSON-serializable (numbers / ISO strings); got "
-                    f"{filters!r}"
-                ) from exc
-            return self._commit_mor_delete(snap, entry)
-        if mode != "copy-on-write":
-            raise ValueError(
-                f"unknown delete mode {mode!r}: expected "
-                "'copy-on-write' or 'merge-on-read'"
-            )
-        pred = self._interval_pred(filters)
-        survivors = self._read_entries(snap, candidates).where(
-            ~F.coalesce(pred, F.lit(False))
-        )
-        return self._replace_entries(
-            snap, untouched, survivors, "delete", partition_by
+        return self._delete_rows(
+            self.snapshot(),
+            filters,
+            {"filters": {c: [lo, hi] for c, (lo, hi) in filters.items()}},
+            self._interval_pred(filters),
+            partition_by,
+            mode,
         )
 
     def delete_keys(
@@ -1562,31 +1553,15 @@ class SnapshotTable:
                 "delete_keys: keys must be JSON-serializable "
                 "(numbers / strings)"
             ) from exc
-        snap = self.snapshot()
-        candidates, untouched = self._split_by_overlap(
-            snap, {key_col: (min(keys), max(keys))}
-        )
-        if not candidates:
-            return None
-        if mode == "merge-on-read":
-            entry = {
-                "key_col": key_col,
-                "keys": sorted(keys),
-                "files": sorted(rel for rel, _ in candidates),
-            }
-            return self._commit_mor_delete(snap, entry)
-        if mode != "copy-on-write":
-            raise ValueError(
-                f"unknown delete mode {mode!r}: expected "
-                "'copy-on-write' or 'merge-on-read'"
-            )
         from pyspark.sql import functions as F
 
-        survivors = self._read_entries(snap, candidates).where(
-            ~F.coalesce(F.col(key_col).isin(keys), F.lit(False))
-        )
-        return self._replace_entries(
-            snap, untouched, survivors, "delete", partition_by
+        return self._delete_rows(
+            self.snapshot(),
+            {key_col: (min(keys), max(keys))},
+            {"key_col": key_col, "keys": sorted(keys)},
+            F.col(key_col).isin(keys),
+            partition_by,
+            mode,
         )
 
     def update_where(
@@ -1659,7 +1634,7 @@ class SnapshotTable:
         from pyspark.sql import functions as F
 
         snap = self.snapshot()
-        fields = self._schema_fields(df)
+        fields = self._schema_fields(df.schema)
         if sorted(map(tuple, json.loads(snap["schema_fields"]))) != fields:
             raise ValueError(
                 f"merge schema mismatch vs snapshot v{snap['version']}: "
@@ -1709,30 +1684,15 @@ class SnapshotTable:
         rows, new pinned schema — operation ``schema``. Pinned to the
         base version like every derived commit (a lost CAS means the
         guards ran against a stale snapshot — rerun)."""
-        base = snap["version"]
-        new_snap = dict(snap)
-        new_snap.pop("committed_at", None)  # restamp: this commit is NOW
-        new_snap.update(
+        return self._commit_pinned(
+            snap,
             {
-                "version": base + 1,
-                "parent": base,
                 "operation": "schema",
                 "schema": schema.json(),
-                "schema_fields": json.dumps(
-                    sorted(
-                        (f.name, f.dataType.simpleString())
-                        for f in schema.fields
-                    )
-                ),
+                "schema_fields": json.dumps(self._schema_fields(schema)),
                 **extra,
-            }
+            },
         )
-        if not self._try_commit(base + 1, new_snap):
-            raise CommitConflict(
-                f"table {self.root} advanced past v{base} during schema "
-                "DDL; rerun against the new current snapshot"
-            )
-        return base + 1
 
     _ADDABLE = {
         "string",
@@ -1778,14 +1738,7 @@ class SnapshotTable:
                 "key of the current layout"
             )
         live = {rel for rel, _ in self.files(snap)}
-        for ent in snap.get("retired") or []:
-            if ent["name"] == name and live & set(ent["files"]):
-                raise ValueError(
-                    f"cannot add column {name!r}: the name is still "
-                    "carried physically by live data files (renamed or "
-                    "dropped earlier); compact() first or pick another "
-                    "name"
-                )
+        self._guard_added_names(snap, {name}, live)
         if default is not None and not isinstance(
             default, (str, bool, int, float, date, datetime)
         ):
@@ -1804,8 +1757,6 @@ class SnapshotTable:
                     "files": sorted(live),
                 }
             ]
-        elif snap.get("defaults"):
-            extra["defaults"] = snap["defaults"]
         return self._commit_schema(
             snap, StructType(list(schema.fields) + [field]), extra
         )
@@ -1850,29 +1801,22 @@ class SnapshotTable:
             "retired": list(snap.get("retired") or [])
             + [{"name": old, "files": files}],
         }
-        if any(d["name"] == old for d in snap.get("defaults") or []):
-            # an initial default follows its column's LOGICAL name
-            extra["defaults"] = [
-                {**d, "name": new} if d["name"] == old else d
-                for d in snap["defaults"]
-            ]
-        deletes = snap.get("deletes") or []
-        if any(
-            d.get("key_col") == old or old in d.get("filters", {})
-            for d in deletes
-        ):
-            rewritten = []
-            for d in deletes:
-                d = dict(d)
-                if d.get("key_col") == old:
-                    d["key_col"] = new
-                if "filters" in d and old in d["filters"]:
-                    d["filters"] = {
-                        (new if c == old else c): iv
-                        for c, iv in d["filters"].items()
-                    }
-                rewritten.append(d)
-            extra["deletes"] = rewritten
+        # an initial default follows its column's LOGICAL name
+        extra["defaults"] = [
+            {**d, "name": new} if d["name"] == old else d
+            for d in snap.get("defaults") or []
+        ]
+        extra["deletes"] = []
+        for d in snap.get("deletes") or []:
+            d = dict(d)
+            if d.get("key_col") == old:
+                d["key_col"] = new
+            if "filters" in d:
+                d["filters"] = {
+                    (new if c == old else c): iv
+                    for c, iv in d["filters"].items()
+                }
+            extra["deletes"].append(d)
         return self._commit_schema(snap, StructType(schema.fields), extra)
 
     def drop_column(self, name: str) -> int:
@@ -1908,15 +1852,10 @@ class SnapshotTable:
         extra = {
             "retired": list(snap.get("retired") or [])
             + [{"name": name, "files": files}],
+            "defaults": [
+                d for d in snap.get("defaults") or [] if d["name"] != name
+            ],
         }
-        if any(d["name"] == name for d in snap.get("defaults") or []):
-            kept = [d for d in snap["defaults"] if d["name"] != name]
-            if kept:
-                extra["defaults"] = kept
-            else:
-                # _commit_schema copies the snapshot dict: an exhausted
-                # key must be removed, not just left unset in `extra`
-                extra["defaults"] = []
         return self._commit_schema(
             snap,
             StructType([f for f in schema.fields if f.name != name]),
@@ -1976,11 +1915,8 @@ class SnapshotTable:
         if v is None:
             raise FileNotFoundError(f"no committed snapshot under {self.root}")
         self.snapshot(v)  # must exist (and not be expired)
-        tmp = f"{self._meta_dir()}/_tmp_{uuid.uuid4().hex}.json"
-        self._write_text(tmp, json.dumps({"version": v}))
-        dest = self._Path(f"{self._meta_dir()}/tag_{name}.json")
-        if not self._fs.rename(self._Path(tmp), dest):
-            self._fs.delete(self._Path(tmp), False)
+        tag_path = f"{self._meta_dir()}/tag_{name}.json"
+        if not self._create_once(tag_path, json.dumps({"version": v})):
             raise ValueError(
                 f"tag {name!r} already exists on {self.root} "
                 f"(tags are immutable; points at v{self.tag_version(name)})"
@@ -1995,19 +1931,12 @@ class SnapshotTable:
 
     def tags(self) -> dict[str, int]:
         """Every tag name -> pinned version."""
-        meta = self._Path(self._meta_dir())
-        out: dict[str, int] = {}
-        if not self._fs.exists(meta):
-            return out
-        for st in self._fs.listStatus(meta):
-            n = st.getPath().getName()
-            if n.startswith("tag_") and n.endswith(".json"):
-                out[n[4:-5]] = int(
-                    json.loads(self._read_text(f"{self._meta_dir()}/{n}"))[
-                        "version"
-                    ]
-                )
-        return out
+        return {
+            n[4:-5]: int(
+                json.loads(self._read_text(f"{self._meta_dir()}/{n}"))["version"]
+            )
+            for n in self._meta_names("tag_")
+        }
 
     def drop_tag(self, name: str) -> None:
         """Remove a tag (the only sanctioned mutation: untag). The
@@ -2040,10 +1969,8 @@ class SnapshotTable:
         if base is None:
             raise ValueError("cannot branch an empty table")
         self.snapshot(base)  # must exist (expired/never-committed raises)
-        tmp = f"{self._meta_dir()}/_tmp_{uuid.uuid4().hex}.json"
-        self._write_text(tmp, json.dumps({"name": name, "base": base}))
-        if not self._fs.rename(self._Path(tmp), self._Path(self._branch_marker(name))):
-            self._fs.delete(self._Path(tmp), False)
+        marker = json.dumps({"name": name, "base": base})
+        if not self._create_once(self._branch_marker(name), marker):
             raise ValueError(f"branch {name!r} already exists on {self.root}")
         return base
 
@@ -2061,18 +1988,13 @@ class SnapshotTable:
     def branches(self) -> dict[str, dict]:
         """Every branch name -> {"base": v, "head": v} (head == base
         before the first branch commit)."""
-        meta = self._Path(self._meta_dir())
         out: dict[str, dict] = {}
-        if not self._fs.exists(meta):
-            return out
-        for st in self._fs.listStatus(meta):
-            n = st.getPath().getName()
-            if n.startswith("branch_") and n.endswith(".json"):
-                info = json.loads(self._read_text(f"{self._meta_dir()}/{n}"))
-                out[info["name"]] = {
-                    "base": info["base"],
-                    "head": self.branch(info["name"]).current_version(),
-                }
+        for n in self._meta_names("branch_"):
+            info = json.loads(self._read_text(f"{self._meta_dir()}/{n}"))
+            out[info["name"]] = {
+                "base": info["base"],
+                "head": self.branch(info["name"]).current_version(),
+            }
         return out
 
     def fast_forward(self, name: str) -> int:
@@ -2125,15 +2047,9 @@ class SnapshotTable:
         metadata table: version, parent, operation, file/byte totals
         and the recorded partition spec, all from metadata (zero data
         reads). Expired versions are simply absent."""
-        cur = self.current_version()
         rows = []
-        for k in range((cur + 1) if cur is not None else 0):
-            p = self._vpath(k)
-            if not self._fs.exists(self._Path(p)):
-                continue
-            snap = json.loads(self._read_text(p))
-            entries = self.files(snap)
-            file_rows = self.file_rows(snap)
+        for _, snap in self._records():
+            entries, _, file_rows = self._manifests(snap)
             counted = [file_rows[rel] for rel, _ in entries if rel in file_rows]
             exact = len(counted) == len(entries) and not snap.get("deletes")
             rows.append(
@@ -2177,10 +2093,9 @@ class SnapshotTable:
         stats). Metadata-only; driver work is O(files), the same bound
         as every manifest resolution in this class."""
         snap = self.snapshot(version)
-        stats = self.file_stats(snap)
-        rows_map = self.file_rows(snap)
+        entries, stats, rows_map = self._manifests(snap)
         out = []
-        for rel, size in self.files(snap):
+        for rel, size in entries:
             parts = {
                 seg.split("=", 1)[0]: seg.split("=", 1)[1]
                 for seg in rel.split("/")[:-1]
@@ -2209,10 +2124,11 @@ class SnapshotTable:
         skew/size question every 100-TB operator asks first, answered
         without opening a single data file."""
         snap = self.snapshot(version)
-        # pending merge-on-read deletes make per-file counts overcount
-        rows_map = {} if snap.get("deletes") else self.file_rows(snap)
+        entries, _, rows_map = self._manifests(snap)
+        if snap.get("deletes"):
+            rows_map = {}  # pending merge-on-read deletes: counts overcount
         agg: dict[tuple, list] = {}
-        for rel, size in self.files(snap):
+        for rel, size in entries:
             key = tuple(
                 seg for seg in rel.split("/")[:-1] if "=" in seg
             )
@@ -2272,23 +2188,18 @@ class SnapshotTable:
         committed snapshot — INCLUDING branch records: an active
         branch's commits are committed state, so vacuum must never
         reclaim the files only they reference."""
-        live: set[str] = set()
         live_manifests: set[str] = set()
-
-        def take(path: str) -> None:
-            if self._fs.exists(self._Path(path)):
-                snap = json.loads(self._read_text(path))
-                live_manifests.update(snap["manifests"])
-                live.update(rel for rel, _ in self.files(snap))
-
-        v = self.current_version()
-        if v is not None:
-            for k in range(v + 1):
-                take(self._vpath(k))
+        for _, snap in self._records():
+            live_manifests.update(snap["manifests"])
         for name, info in self.branches().items():
-            bv = self.branch(name)
-            for k in range(info["base"] + 1, info["head"] + 1):
-                take(bv._vpath(k))
+            branch = self.branch(name)._records(
+                range(info["base"] + 1, info["head"] + 1)
+            )
+            for _, snap in branch:
+                live_manifests.update(snap["manifests"])
+        # a record's files are the union of its manifests' files, so
+        # each live manifest is read once however many records list it
+        live = {rel for rel, _ in self.files({"manifests": sorted(live_manifests)})}
         return live, live_manifests
 
     def orphan_files(self) -> list[str]:
@@ -2431,32 +2342,8 @@ class SnapshotTable:
             )
         else:
             df = df.repartition(n_target)
-        compacted_files = self._write_data_files(df, partition_by)
-        new_manifest = self._write_manifest(
-            compacted_files, *self._collect_stats(compacted_files)
-        )
-        base = snap["version"]
-        new_snap = {
-            "version": base + 1,
-            "parent": base,
-            "operation": "compact",
-            "schema": snap["schema"],
-            "schema_fields": snap["schema_fields"],
-            "manifests": [new_manifest],
-            "partition_spec": self._canonical_specs(partition_by),
-        }
-        if snap.get("stream_state"):
-            new_snap["stream_state"] = snap["stream_state"]
-        blooms = self._resolved_blooms()
-        if blooms:
-            new_snap["bloom_columns"] = blooms
-        if not self._try_commit(base + 1, new_snap):
-            raise CommitConflict(
-                f"table {self.root} advanced past v{base} during "
-                "compaction; vacuum will reclaim the attempt's files — "
-                "rerun compact() against the new current snapshot"
-            )
-        return base + 1
+        # ``or []``: a sort/z-order rewrite without partition_by is flat
+        return self._replace_entries(snap, [], df, "compact", partition_by or [])
 
     def expire_snapshots(
         self, keep_last: int = 1, older_than_s: float | None = None
@@ -2493,17 +2380,13 @@ class SnapshotTable:
         pinned.update(info["base"] for info in self.branches().values())
         cutoff = None if older_than_s is None else _time.time() - older_than_s
         removed = 0
-        for k in range(cur - keep_last + 1):
-            if k in pinned:
-                continue
-            p = self._vpath(k)
-            if not self._fs.exists(self._Path(p)):
-                continue
+        candidates = (k for k in range(cur - keep_last + 1) if k not in pinned)
+        for k, snap in self._records(candidates):
             if cutoff is not None:
-                stamp = json.loads(self._read_text(p)).get("committed_at")
+                stamp = snap.get("committed_at")
                 if stamp is None or stamp >= cutoff:
                     continue  # too young (or unstamped): keep
-            self._fs.delete(self._Path(p), False)
+            self._fs.delete(self._Path(self._vpath(k)), False)
             removed += 1
         return removed
 
@@ -2532,25 +2415,16 @@ class _BranchView(SnapshotTable):
         super().__init__(parent.spark, parent.root, parent._bloom_columns)
         self._branch = name
         self._base = base
+        self._vprefix = f"b_{name}_v"
 
     def _vpath(self, version: int) -> str:
         if version <= self._base:
             return f"{self._meta_dir()}/v{version}.json"
-        return f"{self._meta_dir()}/b_{self._branch}_v{version}.json"
+        return super()._vpath(version)
 
     def current_version(self) -> int | None:
-        meta = self._Path(self._meta_dir())
-        best = self._base
-        prefix = f"b_{self._branch}_v"
-        for st in self._fs.listStatus(meta):
-            n = st.getPath().getName()
-            if n.startswith(prefix) and n.endswith(".json"):
-                try:
-                    k = int(n[len(prefix):-5])
-                except ValueError:
-                    continue
-                best = k if k > best else best
-        return best
+        head = super().current_version()
+        return self._base if head is None else max(head, self._base)
 
     def _blocked(self, op: str):
         raise ValueError(

@@ -357,7 +357,7 @@ def test_cli_prepare_corpus_web_flags(spark, tmp_path, capsys):
 
 
 def test_spark_submit_py_files_deploy(spark, tmp_path):
-    """The north-rule launch path, for real: package.py builds the zip,
+    """The north-rule launch path, for real: dataval_spark.package builds the zip,
     spark-submit --py-files runs run_validate.py with the package
     importable ONLY from the zip, and the exit code follows the
     validation contract (4 = errors: the fixture plants a drifted
@@ -376,8 +376,8 @@ def test_spark_submit_py_files_deploy(spark, tmp_path):
 
     zip_path = str(tmp_path / "dataval_spark.zip")
     subprocess.run(
-        [sys.executable, os.path.join(repo, "package.py"), zip_path],
-        check=True, capture_output=True,
+        [sys.executable, "-m", "dataval_spark.package", "-o", zip_path],
+        check=True, capture_output=True, cwd=repo,
     )
     # run from a scratch cwd so dataval_spark can ONLY come from the zip
     proc = subprocess.run(

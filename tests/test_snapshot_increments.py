@@ -219,3 +219,39 @@ def test_continuous_drift_gate_rides_increments(spark, tmp_path):
         if r.get("drifted") and r["part"] != "*"
     }
     assert flagged == {"0"}
+
+
+def test_verdicts_cover_every_row_across_increments(spark, tmp_path):
+    """Each increment writes its verdicts under its own
+    snapshot_version=<N> directory, so a delta touching the same parts
+    as earlier versions never replaces their verdicts; a full
+    re-validation supersedes every other version's verdicts."""
+    table = str(tmp_path / "tbl")
+    mp = str(tmp_path / "manifest")
+    vp = str(tmp_path / "verdicts")
+    t = SnapshotTable(spark, table)
+    suite = transcript_suite()
+
+    t.append(transcripts(spark, n_convs=30, seed=3, n_parts=2), partition_by=["part"])
+    validate_snapshot_increments(spark, table, suite, mp, verdicts_path=vp)
+    for seed in (9, 11):  # both deltas cover the same parts as the base
+        t.append(transcripts(spark, n_convs=12, seed=seed, n_parts=2))
+        validate_snapshot_increments(spark, table, suite, mp, verdicts_path=vp)
+    verdicts = spark.read.parquet(vp)
+    assert verdicts.count() == t.read().count()
+    assert {"snapshot_version", "part"} <= set(verdicts.columns)
+
+    # re-running at the same version writes nothing
+    assert validate_snapshot_increments(
+        spark, table, suite, mp, verdicts_path=vp
+    ) is None
+    assert spark.read.parquet(vp).count() == t.read().count()
+
+    # a row change forces a full pass that leaves only current rows
+    t.delete_where({"turn_idx": (0, 0)}, partition_by=["part"])
+    r = validate_snapshot_increments(spark, table, suite, mp, verdicts_path=vp)
+    assert r is not None and _sentinels(spark, mp)[-1][1]["mode"] == "full"
+    verdicts = spark.read.parquet(vp)
+    assert verdicts.count() == t.read().count()
+    versions = verdicts.select("snapshot_version").distinct().collect()
+    assert [row.snapshot_version for row in versions] == [t.current_version()]
